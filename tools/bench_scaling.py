@@ -285,7 +285,7 @@ def job_knn(spark, n: int) -> int:
 
     # deterministic release of the PREVIOUS call's caches: knn_join frees
     # everything via a GC finalizer on the returned frame (salted plans,
-    # reverse-order — see knn.py), and py4j reference cycles can defer that
+    # reverse-order — see gis_scripts_spark/cache.py), and py4j reference cycles can defer that
     # into the next timed run. gc first (fires the finalizer), then
     # clearCache for anything else: stale blocks measured a 2x slowdown on
     # the NEXT 4M run (72-76 s vs 34-36 s clean — storage fights the sort
